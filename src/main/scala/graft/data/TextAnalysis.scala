@@ -1,5 +1,6 @@
 package graft.data
 
+import graft.data.Exprs.bound
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,12 +18,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "des", "une", "est", "que"),
     "es" -> Seq("el", "la", "los", "las", "que", "por", "con", "una"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein"))
-
-  /** Expression-level let binding: evaluate `x` once per row and expose it
-    * to `f` as a lambda variable (captured subtrees inside lambdas are
-    * otherwise re-evaluated per element/reference). */
-  private def bound(x: Column)(f: Column => Column): Column =
-    element_at(transform(array(x), v => f(v)), 1)
 
   private def profileScore(toks: Column, words: Seq[String]): Column =
     size(array_intersect(toks, array(words.map(lit(_)): _*))) * 1000 +

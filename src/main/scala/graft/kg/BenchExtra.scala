@@ -1,7 +1,5 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra benchmark harness (NOT the driver's frozen graft.Bench): times
   * individual SparkEntry queries with the noop sink (guide §1.4 — every
   * column of every row computed, no output cost, no count-only pruning)
@@ -15,16 +13,8 @@ object BenchExtra {
     val names = args(0).split(",").toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("bench-extra")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = LocalSpark.defaultCores
+    val spark = LocalSpark.session(cores, "bench-extra")
     import org.apache.spark.sql.functions.col
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
     for (n <- names) {

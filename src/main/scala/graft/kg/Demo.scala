@@ -2,7 +2,6 @@ package graft.kg
 
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end smoke driver: synthesize a transcripts table, run the full
   * extraction pipeline, print table counts + samples. Usage:
@@ -12,15 +11,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val nConvs = args.headOption.map(_.toInt).getOrElse(50)
     val turnsPerConv = args.lift(1).map(_.toInt).getOrElse(14)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-kg-demo")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(LocalSpark.defaultCores, "graft-kg-demo")
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft_demo").toString

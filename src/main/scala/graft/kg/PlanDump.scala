@@ -1,6 +1,5 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named SparkEntry queries (plus the
@@ -17,16 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("plandump")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(LocalSpark.defaultCores, "plandump")
     new java.io.File(outDir).mkdirs()
     import org.apache.spark.sql.functions._
 

@@ -24,20 +24,6 @@ import org.apache.spark.sql.functions.col
   */
 object ScaleBench {
 
-  private def session(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scalebench-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Samples used JVM heap every 100 ms; peak read at finish(). */
   private final class HeapPeak extends Thread {
     @volatile private var peakB = 0L
@@ -93,7 +79,7 @@ object ScaleBench {
     val turnsPer = 40
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
 
-    val prep = session(32)
+    val prep = LocalSpark.session(32, "graft-scalebench-32")
     val smallPath = gen(prep, small, turnsPer, nFiles = 128)
     val bigPath = gen(prep, big, turnsPer, nFiles = 256)
     // warm-up once: JIT + codegen are JVM-global
@@ -107,7 +93,7 @@ object ScaleBench {
       cores <- List(8, 32)
       (label, path, n) <- List(("1x", smallPath, small), ("10x", bigPath, big))
     } yield {
-      val spark = session(cores)
+      val spark = LocalSpark.session(cores, s"graft-scalebench-$cores")
       try {
         System.gc()
         val peak = new HeapPeak; peak.start()
@@ -130,7 +116,7 @@ object ScaleBench {
 
     // materialize the 10× workload at local[32]: all 8 bucket-partitioned
     // tables + snapshot/lineage commit (nBuckets scaled with the input)
-    val spark = session(32)
+    val spark = LocalSpark.session(32, "graft-scalebench-32")
     val mat = try {
       val tr = KgPipeline.readConversationPartitioned(spark, bigPath)
       val out = java.nio.file.Files.createTempDirectory("graft_scalebench_mat").toString

@@ -1,7 +1,6 @@
 package graft.kg
 
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Ad-hoc diagnosis for the round-7 cycle design: how much of a kg chain
@@ -12,18 +11,10 @@ import org.apache.spark.sql.functions.col
   * per-visit overhead the cycle headline conservatively includes. */
 object SessionInitProbe {
   def main(args: Array[String]): Unit = {
-    val cores = args.headOption.map(_.toInt).getOrElse(32)
+    val cores = args.headOption.map(_.toInt).getOrElse(LocalSpark.defaultCores)
     val path = args.lift(1).getOrElse("/tmp/graft_bench_transcripts40p_320000")
     val reps = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cores, "graft-session-init")
     import spark.implicits._
     // warm the FULL chain shape (canonicalize incl. broadcast/AQE/codegen
     // init), not just extraction — rep 1 should then match steady state

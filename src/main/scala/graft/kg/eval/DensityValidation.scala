@@ -1,5 +1,6 @@
 package graft.kg.eval
 
+import graft.data.Exprs.bound
 import org.apache.commons.math3.distribution.{NormalDistribution, TDistribution}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -41,8 +42,8 @@ object DensityValidation {
   def densityProxy(text: Column): Column = {
     // bind the token extraction once per row (lambda-variable let): the two
     // size() references are slot reads, not two regex passes
-    val toksE = regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
-    element_at(transform(array(toksE), toks => densityFromToks(toks, text)), 1)
+    bound(regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0)))(
+      toks => densityFromToks(toks, text))
   }
 
   /** Per-doc table (id, density, tokens, accuracy): accuracy is the binary

@@ -1,24 +1,14 @@
 package graft
 
 import graft.kg.io.CaseAdapter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-adaptive case loading (_adapt_case / _sanitize_case_id,
   * run_iltur.py:431-577): heterogeneous corpus schemas coalesce to
   * (case_id, text, label) and feed the pipeline as single-document
   * transcripts. */
-class CaseAdapterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("graft-adapter-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CaseAdapterSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("sanitize: path separators, weird chars, collapse, empty fallback") {
     import spark.implicits._

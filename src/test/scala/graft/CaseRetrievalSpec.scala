@@ -3,8 +3,6 @@ package graft
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.kg.query.CaseRetrieval
 import graft.kg.query.CaseRetrieval._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -16,15 +14,7 @@ import scala.jdk.CollectionConverters._
   * comparisons use 1e-9: the reference sums over Python sets whose
   * iteration order is hash-seed dependent, so its own last-ulp results vary
   * per process. */
-class CaseRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("graft-caseretrieval-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CaseRetrievalSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val mapper = new ObjectMapper()
   private lazy val fx: JsonNode = mapper.readTree(

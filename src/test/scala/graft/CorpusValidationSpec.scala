@@ -4,24 +4,13 @@ import graft.kg.eval.CorpusValidation
 import graft.kg.extract.GraphAssembly
 import graft.kg.query.GraphQuality
 import graft.kg.table.Materializer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage for the round-7 oracle-backed operators: warning
   * classification, the tier gate, the bucket-granular resume filter, and
   * the corpus aggregate validation roll-up. */
-class CorpusValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-corpus-validation-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CorpusValidationSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("classifyWarning: error patterns win over cosmetic; else substantive") {
     assert(GraphAssembly.classifyWarning("Edge e1: target 'x' not found") == "error")

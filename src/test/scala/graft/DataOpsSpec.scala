@@ -1,21 +1,10 @@
 package graft
 
 import graft.data.{Dedup, Multimodal, Similarity, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-data-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DataOpsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
   private lazy val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -1,8 +1,6 @@
 package graft
 
 import graft.kg.eval.DensityValidation
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DensityValidation statistics vs an externally computed fixture: the
@@ -11,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (cross_domain_density_validation.py:123-219 — Pearson/point-biserial,
   * np.percentile + digitize quartiles, two-proportion z, Student t,
   * Cohen's d) with a Numerical-Recipes incomplete-beta for the t CDF. */
-class DensityValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("graft-density-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DensityValidationSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val n = 100
   private val density = Array.tabulate(n)(i => ((i * 37) % 100) / 25.0 + (i % 2) * 0.8)

@@ -1,25 +1,13 @@
 package graft
 
 import graft.kg.eval.DualEngineCheck
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** sbt-gated version of Verify's dual-engine self-check: the Spark pipeline
   * (conv_id exchange + sort + consecutive-run grouping + encoders) and the
   * pure-JVM single-thread extractor loop must agree exactly — triples as a
   * multiset plus all four histogram projections the kg_* queries publish. */
-class DualEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-dual-engine")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DualEngineSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("Spark pipeline output == pure-JVM extractor on 300 conversations") {
     val n = 300
@@ -56,5 +44,16 @@ class DualEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         SparkEntry.queries("kg_json_export")(spark, dir)),
       DualEngineCheck.pure2(memoN, 14))
     assert(ext.allEqual, ext.json)
+  }
+
+  test("SparkEntry.entry == kg_triples rows (sf0.001 memo)") {
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(dir).isDirectory)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, String)] =
+      df.select("conv_id", "subj", "pred", "obj").collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).sorted
+    val entry = rows(SparkEntry.entry(spark))
+    assert(entry.nonEmpty)
+    assert(entry == rows(SparkEntry.queries("kg_triples")(spark, dir)))
   }
 }

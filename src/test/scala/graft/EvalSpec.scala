@@ -4,9 +4,7 @@ import graft.kg.eval.{Qrels, RankMetrics, Significance}
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
 import graft.kg.query.Retrieval
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Qrels construction + significance layer (eval_retrieval_v2.py:345-643,
@@ -14,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * string-for-string against outputs of the reference's own
   * _concept_id_to_patterns, and the full retrieval-eval flow (build qrels →
   * score → RankMetrics → paired t-test + bootstrap CI) runs end-to-end. */
-class EvalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("graft-eval-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EvalSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("concept-id patterns match the reference generator string-for-string") {
     assert(Qrels.conceptIdToPatterns("CONST_ART14") == List(

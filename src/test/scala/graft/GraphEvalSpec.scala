@@ -2,8 +2,6 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.kg.query.GraphEval
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -13,15 +11,7 @@ import scala.jdk.CollectionConverters._
   * published graphs (scripts/gen_grapheval_fixture.py — the committed
   * evaluation_outputs/ predate the current corpus, so parity targets the
   * published CODE, as with the orphan-repair fixtures). */
-class GraphEvalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("graft-grapheval-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphEvalSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val mapper = new ObjectMapper()
   private def fixture = mapper.readTree(

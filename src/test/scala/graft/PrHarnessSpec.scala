@@ -3,8 +3,6 @@ package graft
 import graft.kg.eval.PrEval
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The P/R ≥ 0.95 acceptance harness (BASELINE.json): extracted triples are
@@ -12,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * snapshot pattern of the reference test bench
   * (unified_testing_bench.py:1116-1130). Regenerate the fixture
   * (graft.kg.GoldenGen) only on INTENTIONAL rule changes. */
-class PrHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pr-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PrHarnessSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def golden: Seq[(String, String, String, String)] = {
     val in = getClass.getResourceAsStream("/graft/golden_triples.json")

@@ -3,21 +3,11 @@ package graft
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
 import graft.kg.query.{GraphOps, Retrieval}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class QuerySpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuerySpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-query-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
   import spark.implicits._
 
   private lazy val transcripts = TranscriptGen.turns(30, 12).toDF()

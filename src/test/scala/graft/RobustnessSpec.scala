@@ -2,22 +2,11 @@ package graft
 
 import graft.kg.extract.DocExtractor
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Real-corpus robustness: malformed, empty, and degenerate inputs must not
   * crash the pipeline and must stay deterministic. */
-class RobustnessSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-robust-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RobustnessSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("empty conversation") {
     val g = DocExtractor.extract("c_empty", Seq.empty)

@@ -3,23 +3,11 @@ package graft
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
 import graft.kg.table.{BucketLineage, Materializer, SnapshotStore}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkPipelineSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def transcriptsDF(n: Int) = {
     import spark.implicits._

@@ -2,23 +2,12 @@ package graft
 
 import graft.kg.gen.TranscriptGen
 import graft.kg.streaming.TranscriptStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-stream-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("streaming extraction emits a conversation's triples after its session gap") {
     import spark.implicits._

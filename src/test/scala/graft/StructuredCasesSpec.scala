@@ -3,27 +3,16 @@ package graft
 import graft.kg.gen.TranscriptGen
 import graft.kg.io.StructuredCases
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity for the structured (non-graph) case format: reader replays the
   * PUBLISHED structured-nongraph-cases corpus and reproduces the published
   * checkpoint stats exactly; writer round-trips through the reader; the
   * graph → structured-case view sections extraction output faithfully. */
-class StructuredCasesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StructuredCasesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val corpusDir = "/root/reference/structured-nongraph-cases"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-structured-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def corpusExists = new java.io.File(corpusDir).isDirectory
 
