@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parity replays already pin.
   *
   * Two inputs are checked by [[run]]:
-  *  - the EXACT kg_* memo input (same generator call SparkEntry uses), so
+  *  - the EXACT kg_* memo input (same generator call KgQueries uses), so
   *    the committed kg_triples / histogram / orphan rows themselves are
   *    dual-engined, and
   *  - a ≥1k-conversation sample (judge threshold), independent of the sf
@@ -142,7 +142,7 @@ object DualEngineCheck {
       linearize: Map[String, String],
       jsonExport: Map[String, String])
 
-  /** The concept-id set kg_conceptset_retrieval queries (SparkEntry). */
+  /** The concept-id set kg_conceptset_retrieval queries (KgQueries). */
   val ConceptQueryIds: Seq[String] = Seq(
     "DOCTRINE_NATURAL_JUSTICE_AUDI_ALTERAM_PARTEM",
     "DOCTRINE_PROPORTIONALITY_TEST", "MANIFEST_ARBITRARINESS")

@@ -65,8 +65,7 @@ object KgPipeline {
     * numPartitions repartition is exempt from AQE coalescing and satisfies
     * groupByKey's clustered distribution, so no second exchange is added. */
   private def extractionPartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.extract.partitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism * 4)
+    spark.sparkContext.defaultParallelism * 4
 
   /** One exchange total: explicit hash repartition on conv_id (AQE-exempt)
     * + sortWithinPartitions, then consecutive-run grouping in mapPartitions.
@@ -176,28 +175,23 @@ object KgPipeline {
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
-      ontology: OntologyData = null,
       prePartitioned: Boolean = false): Dataset[ConvGraph] = {
     import spark.implicits._
-    val ont = Option(ontology).getOrElse(Ontology.forJurisdiction(jurisdiction))
-    val slim =
-      if (prePartitioned) slimTurnsPrePartitioned(spark, transcripts)
-      else slimTurns(spark, transcripts)
-    slim.mapPartitions(it => perConversation(it, ont, jurisdiction)(Iterator.single(_)))
+    flatExtract(spark, transcripts, jurisdiction, prePartitioned)(Iterator.single(_))
   }
 
   /** Fast path: run extraction and emit projected rows DIRECTLY from
     * `flatMapGroups`, skipping the heavyweight ConvGraph encoder round-trip
     * (serialize deep nested graph → deserialize → re-serialize projection).
     * This is the production shape for single-table outputs: one shuffle, one
-    * small-row encoder. */
+    * small-row encoder. The ontology is the jurisdiction's. */
   def flatExtract[T: org.apache.spark.sql.Encoder](
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
-      ontology: OntologyData = Ontology.default,
       prePartitioned: Boolean = false)(
       f: ConvGraph => IterableOnce[T]): Dataset[T] = {
+    val ontology = Ontology.forJurisdiction(jurisdiction)
     val slim =
       if (prePartitioned) slimTurnsPrePartitioned(spark, transcripts)
       else slimTurns(spark, transcripts)
@@ -277,14 +271,19 @@ object KgPipeline {
       Iterator.single(empty.copy(summary = Some(g.summary)))
   }
 
+  /** One table's rows from a persisted [[MatRow]] union DataFrame: the rows
+    * tagged `branch` (a MatRow field name), flattened to that table's
+    * columns. */
+  def branch(union: DataFrame, branch: String): DataFrame =
+    union.filter(col(branch).isNotNull).select(col(branch + ".*"))
+
   def allTablesDirect(
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
-      ontology: OntologyData = Ontology.default,
       prePartitioned: Boolean = false): Dataset[MatRow] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[MatRow]
-    flatExtract(spark, transcripts, jurisdiction, ontology, prePartitioned)(matRows)
+    flatExtract(spark, transcripts, jurisdiction, prePartitioned)(matRows)
   }
 
   /** The same tagged union projected from an already-extracted graph

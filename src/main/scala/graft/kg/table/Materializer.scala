@@ -1,6 +1,5 @@
 package graft.kg.table
 
-import graft.kg.ontology.{Ontology, OntologyData}
 import graft.kg.pipeline.KgPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,7 +45,6 @@ object Materializer {
       root: String,
       nBuckets: Int = 32,
       jurisdiction: String = "in",
-      ontology: OntologyData = null,
       prePartitioned: Boolean = false): Report = {
 
     val store = new SnapshotStore(root)
@@ -69,12 +67,10 @@ object Materializer {
     // and each branch keeps the exact row order of the per-table flatMaps.
     val union: DataFrame =
       KgPipeline.allTablesDirect(spark, pending.drop("bucket"), jurisdiction,
-        Option(ontology).getOrElse(graft.kg.ontology.Ontology.forJurisdiction(jurisdiction)),
         prePartitioned = prePartitioned)
         .toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def branch(name: String): DataFrame =
-      union.filter(col(name).isNotNull).select(col(name + ".*"))
+    def branch(name: String): DataFrame = KgPipeline.branch(union, name)
 
     def addBucket(df: DataFrame, convCol: String): DataFrame =
       df.withColumn("bucket", bucketOf(col(convCol), nBuckets))
@@ -134,53 +130,12 @@ object Materializer {
           s"(read the layout via KgPipeline.readConversationPartitioned)")
     }
 
-    // per-bucket lineage: extraction counts from summaries + an
-    // order-independent content hash over the triple set. Both aggregate the
-    // JUST-WRITTEN parquet (tiny columnar scans, bucket-pruned to this run's
-    // buckets) instead of re-decoding the extraction cache two more times —
-    // the same rows by construction (reconstructStats reads the same files).
-    val pendingSet = pendingBuckets
-    val lineageAgg = spark.read.parquet(s"$root/summaries")
-      .filter(col("bucket").isin(pendingSet: _*))
-      .groupBy(col("bucket")).agg(
-      count(lit(1)).as("convs"),
-      sum(col("nTurns")).as("input_rows"),
-      sum(col("nFacts")).as("facts"), sum(col("nConcepts")).as("concepts"),
-      sum(col("nIssues")).as("issues"), sum(col("nArguments")).as("arguments"),
-      sum(col("nHoldings")).as("holdings"), sum(col("nPrecedents")).as("precedents"),
-      sum(col("nEdges")).as("edges"), sum(col("nChains")).as("chains"))
-      .collect().map(r => r.getInt(0) -> r).toMap
-
-    val hashByBucket = spark.read.parquet(s"$root/triples")
-      .filter(col("bucket").isin(pendingSet: _*))
-      .withColumn("rh", xxhash64(concat_ws("|", col("convId"), col("subj"), col("pred"), col("obj"))))
-      .groupBy(col("bucket"))
-      // bit_xor: order-independent, overflow-free under ANSI mode
-      .agg(expr("bit_xor(rh)").as("h"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
+    // per-bucket lineage over the JUST-WRITTEN parquet (tiny columnar scans,
+    // bucket-pruned to this run's buckets) instead of re-decoding the
+    // extraction cache two more times — the same rows by construction
+    // (reconstructStats reads the same files)
+    val lineage = bucketLineage(spark, root, "extract", Some(pendingBuckets))
     union.unpersist()
-
-    val lineage = pendingBuckets.map { b =>
-      lineageAgg.get(b) match {
-        case Some(r) =>
-          BucketLineage(
-            bucket = b, stage = "extract",
-            inputRows = r.getAs[Long]("input_rows"),
-            outputRows = Map(
-              "convs" -> r.getAs[Long]("convs"),
-              "edges" -> r.getAs[Long]("edges")),
-            extractionCounts = Map(
-              "facts" -> r.getAs[Long]("facts"), "concepts" -> r.getAs[Long]("concepts"),
-              "issues" -> r.getAs[Long]("issues"), "arguments" -> r.getAs[Long]("arguments"),
-              "holdings" -> r.getAs[Long]("holdings"), "precedents" -> r.getAs[Long]("precedents"),
-              "chains" -> r.getAs[Long]("chains")),
-            contentHash = java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
-        case None => // bucket had no conversations — still committed as done
-          BucketLineage(b, "extract", 0L, Map.empty, Map.empty, "0")
-      }
-    }
-
     val snap = store.commit(lineage)
     Report(snap.id, pendingBuckets, done.toList.sorted, rowCounts)
   }
@@ -193,30 +148,47 @@ object Materializer {
     * lost or partial, re-derive per-bucket lineage (counts + content hash)
     * from the materialized tables themselves and commit a fresh snapshot
     * covering every bucket found on disk. Returns the new snapshot. */
-  def reconstructStats(spark: SparkSession, root: String): Snapshot = {
-    val summaries = read(spark, root, "summaries")
-    val lineageAgg = summaries.groupBy(col("bucket")).agg(
+  def reconstructStats(spark: SparkSession, root: String): Snapshot =
+    new SnapshotStore(root).commit(bucketLineage(spark, root, "reconstruct", None))
+
+  /** Per-bucket lineage read back from a root's `summaries` and `triples`
+    * tables: extraction counts plus an order-independent content hash over
+    * the triple set. `buckets` restricts (and orders) the result; a listed
+    * bucket with no conversations still gets a row — empty counts, hash
+    * "0" — so it commits as done. `None` covers every bucket in summaries. */
+  private def bucketLineage(
+      spark: SparkSession, root: String, stage: String,
+      buckets: Option[Seq[Int]]): List[BucketLineage] = {
+    def scan(table: String): DataFrame = {
+      val df = read(spark, root, table)
+      buckets.fold(df)(bs => df.filter(col("bucket").isin(bs: _*)))
+    }
+    val lineageAgg = scan("summaries").groupBy(col("bucket")).agg(
       count(lit(1)).as("convs"), sum(col("nTurns")).as("input_rows"),
       sum(col("nFacts")).as("facts"), sum(col("nConcepts")).as("concepts"),
       sum(col("nIssues")).as("issues"), sum(col("nArguments")).as("arguments"),
       sum(col("nHoldings")).as("holdings"), sum(col("nPrecedents")).as("precedents"),
       sum(col("nEdges")).as("edges"), sum(col("nChains")).as("chains"))
       .collect().map(r => r.getInt(0) -> r).toMap
-    val hashByBucket = read(spark, root, "triples")
+    val hashByBucket = scan("triples")
       .withColumn("rh", xxhash64(concat_ws("|",
         col("convId"), col("subj"), col("pred"), col("obj"))))
-      .groupBy(col("bucket")).agg(expr("bit_xor(rh)").as("h"))
+      .groupBy(col("bucket"))
+      // bit_xor: order-independent, overflow-free under ANSI mode
+      .agg(expr("bit_xor(rh)").as("h"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val lineage = lineageAgg.keys.toList.sorted.map { b =>
-      val r = lineageAgg(b)
-      BucketLineage(b, "reconstruct", r.getAs[Long]("input_rows"),
-        Map("convs" -> r.getAs[Long]("convs"), "edges" -> r.getAs[Long]("edges")),
-        Map("facts" -> r.getAs[Long]("facts"), "concepts" -> r.getAs[Long]("concepts"),
-          "issues" -> r.getAs[Long]("issues"), "arguments" -> r.getAs[Long]("arguments"),
-          "holdings" -> r.getAs[Long]("holdings"), "precedents" -> r.getAs[Long]("precedents"),
-          "chains" -> r.getAs[Long]("chains")),
-        java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
+    buckets.getOrElse(lineageAgg.keys.toSeq.sorted).toList.map { b =>
+      lineageAgg.get(b) match {
+        case Some(r) =>
+          BucketLineage(b, stage, r.getAs[Long]("input_rows"),
+            Map("convs" -> r.getAs[Long]("convs"), "edges" -> r.getAs[Long]("edges")),
+            Map("facts" -> r.getAs[Long]("facts"), "concepts" -> r.getAs[Long]("concepts"),
+              "issues" -> r.getAs[Long]("issues"), "arguments" -> r.getAs[Long]("arguments"),
+              "holdings" -> r.getAs[Long]("holdings"), "precedents" -> r.getAs[Long]("precedents"),
+              "chains" -> r.getAs[Long]("chains")),
+            java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
+        case None => BucketLineage(b, stage, 0L, Map.empty, Map.empty, "0")
+      }
     }
-    new SnapshotStore(root).commit(lineage)
   }
 }

@@ -13,13 +13,7 @@ class JurisdictionSpec extends AnyFunSuite {
     val o = Ontology.echr
     assert(o.concepts.size == 55)
     assert(o.patterns.nonEmpty)
-    val turns = Seq(
-      0 -> "The applicant complained under Article 3 of the Convention about the conditions of detention.",
-      1 -> "In Selmouni v. France [GC], no. 25803/94, the Court held that the Convention is a living instrument.",
-      2 -> "The question is whether the treatment attained the minimum level of severity.",
-      3 -> "We hold that there has been a violation of Article 3 of the Convention.",
-      4 -> "The application is accordingly allowed.")
-    val g = DocExtractor.extract("echr_fix", turns, o, jurisdiction = "echr")
+    val g = DocExtractor.extract("echr_fix", JurisdictionSpec.echrTurns, o, jurisdiction = "echr")
     val precedents = g.nodes.filter(_.nodeType == "precedent")
     assert(precedents.nonEmpty)
     assert(precedents.exists(p => Option(p.caseName).exists(_.contains("Selmouni"))))
@@ -30,13 +24,7 @@ class JurisdictionSpec extends AnyFunSuite {
   test("turkish: ontology loads and extraction handles turkish citations + fold") {
     val o = Ontology.turkish
     assert(o.concepts.size == 77)
-    val turns = Seq(
-      0 -> "Başvurucu, 5237 sayılı Kanun uyarınca verilen karar nedeniyle başvuruda bulunmuştur.",
-      1 -> "AYM, E.2018/123, K.2019/456 sayılı kararında ölçülülük ilkesini değerlendirmiştir.",
-      2 -> "The question is whether the restriction was proportionate.",
-      3 -> "We hold that the interference was not proportionate to the aim pursued.",
-      4 -> "The appeal is allowed.")
-    val g = DocExtractor.extract("tr_fix", turns, o, jurisdiction = "tr")
+    val g = DocExtractor.extract("tr_fix", JurisdictionSpec.trTurns, o, jurisdiction = "tr")
     val precedents = g.nodes.filter(_.nodeType == "precedent")
     assert(precedents.exists(_.citationType.startsWith("tr_")), precedents.map(_.citationType).toString)
     assert(g.summary.nSentences > 0)
@@ -80,4 +68,20 @@ class JurisdictionSpec extends AnyFunSuite {
     val longSHits = graft.kg.rules.Citations.extract(longS, "tr")
     assert(longSHits.exists(_.citationType == "tr_danistay"), longSHits.toString)
   }
+}
+
+object JurisdictionSpec {
+  /** One ECHR and one Turkish fixture conversation, as (turn_idx, text). */
+  val echrTurns: Seq[(Int, String)] = Seq(
+    0 -> "The applicant complained under Article 3 of the Convention about the conditions of detention.",
+    1 -> "In Selmouni v. France [GC], no. 25803/94, the Court held that the Convention is a living instrument.",
+    2 -> "The question is whether the treatment attained the minimum level of severity.",
+    3 -> "We hold that there has been a violation of Article 3 of the Convention.",
+    4 -> "The application is accordingly allowed.")
+  val trTurns: Seq[(Int, String)] = Seq(
+    0 -> "Başvurucu, 5237 sayılı Kanun uyarınca verilen karar nedeniyle başvuruda bulunmuştur.",
+    1 -> "AYM, E.2018/123, K.2019/456 sayılı kararında ölçülülük ilkesini değerlendirmiştir.",
+    2 -> "The question is whether the restriction was proportionate.",
+    3 -> "We hold that the interference was not proportionate to the aim pursued.",
+    4 -> "The appeal is allowed.")
 }

@@ -253,6 +253,22 @@ class SparkPipelineSpec extends AnyFunSuite with LocalSparkSuite {
     }
   }
 
+  test("direct extraction uses the jurisdiction's ontology") {
+    import spark.implicits._
+    for ((jurisdiction, turns, ontology) <- Seq(
+        ("echr", JurisdictionSpec.echrTurns, graft.kg.ontology.Ontology.echr),
+        ("tr", JurisdictionSpec.trTurns, graft.kg.ontology.Ontology.turkish))) {
+      val convId = jurisdiction + "_fix"
+      val df = turns.map { case (i, t) => (convId, i, t) }.toDF("conv_id", "turn_idx", "text")
+      val got = KgPipeline.nodesDirect(spark, df, jurisdiction).collect()
+        .map(n => (n.id, n.nodeType, n.conceptId)).toSet
+      val want = graft.kg.extract.DocExtractor.extract(convId, turns, ontology, jurisdiction)
+        .nodes.map(n => (n.id, n.nodeType, n.conceptId)).toSet
+      assert(want.exists(_._2 == "concept"), want.toString)
+      assert(got == want, jurisdiction)
+    }
+  }
+
   test("stats reconstruction recreates lineage from the tables alone") {
     val root = Files.createTempDirectory("graft_reconstruct").toString
     Materializer.run(spark, transcriptsDF(30), root, nBuckets = 4)
@@ -264,9 +280,14 @@ class SparkPipelineSpec extends AnyFunSuite with LocalSparkSuite {
     assert(new SnapshotStore(root).snapshots.isEmpty)
     val rebuilt = Materializer.reconstructStats(spark, root)
     assert(rebuilt.buckets.toSet == orig.buckets.toSet)
-    val origHashes = orig.lineage.map(l => l.bucket -> l.contentHash).toMap
-    for (l <- rebuilt.lineage if l.inputRows > 0)
-      assert(l.contentHash == origHashes(l.bucket), s"bucket ${l.bucket}")
+    val origByBucket = orig.lineage.map(l => l.bucket -> l).toMap
+    for (l <- rebuilt.lineage if l.inputRows > 0) {
+      val o = origByBucket(l.bucket)
+      assert(l.contentHash == o.contentHash, s"bucket ${l.bucket}")
+      assert(l.inputRows == o.inputRows, s"bucket ${l.bucket}")
+      assert(l.outputRows == o.outputRows, s"bucket ${l.bucket}")
+      assert(l.extractionCounts == o.extractionCounts, s"bucket ${l.bucket}")
+    }
   }
 
   test("GraphStore point lookups prune to one bucket partition") {
@@ -298,8 +319,7 @@ class SparkPipelineSpec extends AnyFunSuite with LocalSparkSuite {
     val g = KgPipeline.graphs(spark, df).persist()
     val union = KgPipeline.allTables(g).toDF()
     def branch(name: String) =
-      union.filter(col(name).isNotNull).select(col(name + ".*"))
-        .collect().map(_.toString).sorted.toSeq
+      KgPipeline.branch(union, name).collect().map(_.toString).sorted.toSeq
     assert(branch("node") == KgPipeline.nodes(g).toDF().collect().map(_.toString).sorted.toSeq)
     assert(branch("edge") == KgPipeline.edges(g).toDF().collect().map(_.toString).sorted.toSeq)
     assert(branch("js") == KgPipeline.justificationSets(g).toDF().collect().map(_.toString).sorted.toSeq)
